@@ -443,11 +443,16 @@ def _assign_cells_np(
     most, and semantic_dedup's CC stage already executes eagerly), so
     this adds one tiny job, not a corpus collect. Preconditions
     (met by semantic_dedup's call site): ``norm`` has no NULL
-    vectors, centroid vectors are non-NULL and unit-norm.
+    vectors, centroid vectors are unit-norm. NULL centroid rows (a
+    hand-built or older stored centroid table) are skipped: no row can
+    be assigned to them.
     """
     import pandas as pd
 
-    rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
+    rows = sorted(
+        (r for r in centroids.collect() if r["centroid"] is not None),
+        key=lambda r: r["centroid_id"],
+    )
     id_t = norm.schema["_vid"].dataType.simpleString()
     cid_t = (
         centroids.schema["centroid_id"].dataType.simpleString()
@@ -760,11 +765,22 @@ def plane_signature(
 
 
 def l2_normalize(vec: Column) -> Column:
-    """vec / ||vec|| in double (zero vectors pass through unchanged)."""
-    n = l2_norm(vec)
-    return F.when(
-        n > 0, F.transform(vec, lambda x: x.cast("double") / n)
-    ).otherwise(F.transform(vec, lambda x: x.cast("double")))
+    """vec / ||vec|| in double (zero vectors pass through unchanged).
+
+    The sum of squares is folded once and handed to ``finish``:
+    Catalyst does not eliminate common subexpressions into higher-order
+    lambdas, so a norm referenced inside the ``transform`` lambda would
+    be recomputed for every element (O(dim²) per row). Same values as
+    ``x / l2_norm(vec)``: identical products, summed in the same order.
+    """
+    return F.aggregate(
+        vec,
+        F.lit(0.0),
+        lambda acc, x: acc + x.cast("double") * x.cast("double"),
+        lambda ss: F.when(
+            ss > 0, F.transform(vec, lambda x: x.cast("double") / F.sqrt(ss))
+        ).otherwise(F.transform(vec, lambda x: x.cast("double"))),
+    )
 
 
 def train_centroids(
@@ -785,7 +801,9 @@ def train_centroids(
     aggregations; the corpus is never shuffled by anything except in
     the final assignment's ``groupBy`` — and that is map-side partial.
     """
-    norm = vectors.select(
+    # NULL vectors take no part in training: a NULL seed would become a
+    # NULL centroid, and they never contribute to a mean
+    norm = vectors.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("_vid"), l2_normalize(F.col(vec_col)).alias("_v")
     )
     # top-K-by-hash compiles to per-partition top-K + a driver merge of
@@ -818,12 +836,8 @@ def train_centroids(
         # OUTCOMES are unchanged (same argmax/tie rule; pinned against
         # _assign_cells in tests/test_semantic_dedup.py), so the mean
         # aggregate below — fp-identical machinery — yields the same
-        # centroids. NULL-vector rows are excluded up front: the old
-        # path assigned them a NULL cell whose posexplode(NULL) emitted
-        # nothing, so they never contributed to a mean either way.
-        assigned = _assign_cells_np(
-            norm.filter(F.col("_v").isNotNull()), "_v", centroids
-        )
+        # centroids.
+        assigned = _assign_cells_np(norm, "_v", centroids)
         centroids = (
             assigned
             .select("centroid_id", F.posexplode("_v").alias("_pos", "_x"))
@@ -1446,13 +1460,22 @@ def _quantize_cols(vec_col: str, int_type: str) -> tuple[Column, Column]:
     allowed, and both are value-preserving on [-128, 127]."""
     x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
     maxabs = F.array_max(F.transform(x, F.abs))
-    q = F.when(
-        maxabs == 0, F.transform(x, lambda v: F.lit(0).cast(int_type))
-    ).otherwise(
-        F.transform(
-            x,
-            lambda v: F.floor((v * F.lit(127.0)) / maxabs).cast(int_type),
-        )
+    # q folds max|v| once and scales in ``finish`` (as in l2_normalize:
+    # ``maxabs`` inside the per-element lambda would be recomputed per
+    # element). ``greatest`` skips NULLs and orders NaN highest, exactly
+    # like ``array_max``, so q and scale see the same maximum.
+    q = F.aggregate(
+        x,
+        F.lit(None).cast("double"),
+        lambda acc, v: F.greatest(acc, F.abs(v)),
+        lambda m: F.when(
+            m == 0, F.transform(x, lambda v: F.lit(0).cast(int_type))
+        ).otherwise(
+            F.transform(
+                x,
+                lambda v: F.floor((v * F.lit(127.0)) / m).cast(int_type),
+            )
+        ),
     )
     return q, (maxabs / F.lit(127.0)).alias("scale")
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sinks import write_partitioned
@@ -45,24 +45,30 @@ def transfer_partition(
 ) -> int:
     """Copy one day's partition of ``source`` to the client target;
     returns the row count copied (the reference's transfer jobs are
-    sized per-table the same way, resource_apply.py:41-57)."""
+    sized per-table the same way, resource_apply.py:41-57).
+
+    One pass: the count is an observed metric of the write itself, not
+    a separate ``count()`` job that reads the partition a second time.
+    """
+    if target.kind not in ("path", "jdbc"):
+        raise ValueError(f"unknown transfer target kind {target.kind!r}")
     df = (
         source
         if isinstance(source, DataFrame)
         else spark.read.parquet(source)
     )
-    day = df.filter(F.col("dt") == F.lit(ds).cast("date"))
-    n = day.count()
+    rows = Observation()
+    day = df.filter(F.col("dt") == F.lit(ds).cast("date")).observe(
+        rows, F.count(F.lit(1)).alias("n")
+    )
     if target.kind == "path":
         out = day.drop("dt")
         write_partitioned(out, "", ds, path=f"{target.location}/{table}")
-    elif target.kind == "jdbc":
+    else:
         writer = day.write.mode("append").format("jdbc").option(
             "url", target.location
         ).option("dbtable", table)
         for k, v in target.options:
             writer = writer.option(k, v)
         writer.save()
-    else:
-        raise ValueError(f"unknown transfer target kind {target.kind!r}")
-    return n
+    return rows.get["n"]

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DateType, StructField, StructType
 
 from ..chains import CHAINS, ChainConfig, ETHEREUM
 from ..operators import enrich, sinks, verify
@@ -30,6 +31,20 @@ from ..operators.decode import (
     extract_token_transfers,
 )
 from ..sources.staging import input_exists, read_staging
+
+
+def write_and_reload(df, path: str, ds: str, extra=None):
+    """Write one day of ``df`` to the warehouse table at ``path`` and
+    return the whole table read back. The read uses the written frame's
+    schema, laid out as a partitioned read orders it (data columns, dt,
+    hash buckets): a day that wrote no rows leaves no file to infer it
+    from."""
+    sinks.write_partitioned(df, "", ds, extra, path=path)
+    parts = ["dt", *(extra or [])]
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    fields.append(StructField("dt", DateType()))
+    fields += [df.schema[c] for c in extra or []]
+    return df.sparkSession.read.schema(StructType(fields)).parquet(path)
 
 
 @dataclass
@@ -189,8 +204,7 @@ def run_evm_day(
         p.add(f"load_{t}", _load(t))
 
     def _write(df, table, extra=None):
-        sinks.write_partitioned(df, "", ds, extra, path=_wh(table))
-        return spark.read.parquet(_wh(table))
+        return write_and_reload(df, _wh(table), ds, extra)
 
     p.add(
         "enrich_blocks",
@@ -312,8 +326,7 @@ def run_evm_day(
 
         def _parse(c, el=el):
             out = decode_log_events(_g(c, "enrich_logs", "logs"), el)
-            sinks.write_partitioned(out, "", ds, path=_wh(f"evt_{el.name}"))
-            return spark.read.parquet(_wh(f"evt_{el.name}"))
+            return _write(out, f"evt_{el.name}")
 
         p.add(name, _parse, deps=["enrich_logs"])
 

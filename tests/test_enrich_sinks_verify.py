@@ -2,6 +2,7 @@
 dedup append, and verify raise/pass paths."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -250,6 +251,154 @@ class TestBucketPrunedAntiJoin:
         back = spark.read.parquet(path)
         assert back.count() == 200
         assert back.select("address").distinct().count() == 200
+
+
+def _bucket_dirs(root):
+    """{partition directory: (data files, data bytes)} under ``root``."""
+    out = {}
+    for d, _subdirs, files in os.walk(root):
+        data = [f for f in files if f.endswith(".parquet")]
+        if data:
+            out[d] = (
+                len(data),
+                sum(os.path.getsize(os.path.join(d, f)) for f in data),
+            )
+    return out
+
+
+def _same_rows(a, b):
+    """Multiset equality of two small frames' rows."""
+    return Counter(a.collect()) == Counter(b.collect())
+
+
+def _over_file_budget(spark, dirs):
+    """{directory: files} for bucket directories holding more than
+    ceil(bytes / advisory size) files (at least one is allowed) — the
+    rebalance rule's sizing contract; empty when it holds."""
+    advisory = int(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return {
+        d: n for d, (n, b) in dirs.items() if n > max(1, -(-b // advisory))
+    }
+
+
+class TestBucketedWriteLayout:
+    """`write_partitioned` with hash-bucket partition columns clusters
+    rows on them before the writer: about one file per bucket
+    directory, however many tasks produced the rows and however skewed
+    the buckets are."""
+
+    N_TASKS = 6
+
+    def _skewed(self, spark, ds_tag="a", n=1200):
+        # 70 % of the rows in one (address_hash, selector_hash) bucket,
+        # spread over N_TASKS write tasks that each touch every bucket
+        return (
+            spark.range(n)
+            .select(
+                F.col("id"),
+                F.concat(F.lit(ds_tag), F.col("id").cast("string")).alias("v"),
+                F.when(F.col("id") % 10 < 7, F.lit(0))
+                .otherwise(F.col("id") % 5)
+                .cast("int")
+                .alias("address_hash"),
+                F.when(F.col("id") % 10 < 7, F.lit(0))
+                .otherwise(F.col("id") % 3)
+                .cast("int")
+                .alias("selector_hash"),
+            )
+            .repartition(self.N_TASKS)
+        )
+
+    def _write(self, df, ds, path):
+        sinks.write_partitioned(
+            df, "", ds,
+            extra_partition_cols=["address_hash", "selector_hash"],
+            path=path,
+        )
+
+    def test_rows_identical_and_one_file_per_bucket(self, spark, tmp_path):
+        path = str(tmp_path / "logs")
+        df = self._skewed(spark)
+        self._write(df, "2024-01-01", path)
+        back = spark.read.parquet(path).select(*df.columns)
+        assert _same_rows(back, df)
+        dirs = _bucket_dirs(path)
+        n_buckets = df.select("address_hash", "selector_hash").distinct().count()
+        assert len(dirs) == n_buckets
+        assert _over_file_budget(spark, dirs) == {}
+        # at test sizes: exactly one file per bucket, not tasks × buckets
+        assert sum(n for n, _b in dirs.values()) == n_buckets
+
+    def test_rerun_replaces_only_that_day(self, spark, tmp_path):
+        path = str(tmp_path / "logs")
+        self._write(self._skewed(spark, "d1"), "2024-01-01", path)
+        self._write(self._skewed(spark, "d2"), "2024-01-02", path)
+        day1 = os.path.join(path, "dt=2024-01-01")
+        before = {
+            d: sorted(os.listdir(d))
+            for d in _bucket_dirs(day1)
+        }
+        rerun = self._skewed(spark, "d2b", n=600)
+        self._write(rerun, "2024-01-02", path)
+        # day 1: the very same files, untouched
+        assert {d: sorted(os.listdir(d)) for d in _bucket_dirs(day1)} == before
+        back = spark.read.parquet(path)
+        day2 = back.filter(F.col("dt") == F.lit("2024-01-02").cast("date"))
+        assert day2.filter(~F.col("v").startswith("d2b")).count() == 0
+        assert day2.count() == 600
+        assert back.filter(F.col("v").startswith("d1")).count() == 1200
+        assert _over_file_budget(spark, _bucket_dirs(path)) == {}
+
+    def test_pruned_decode_unchanged(self, spark, tmp_path):
+        """Decoding from the rebalanced layout, pruned to one contract's
+        bucket, returns exactly the rows decoding the in-memory logs
+        gives."""
+        from datawaves_etl_airflow_spark.operators.decode import (
+            TRANSFER_TOPIC0,
+            decode_log_events,
+        )
+        from datawaves_etl_airflow_spark.queries.domain import TRANSFER_EVENT
+
+        word = lambda a: "0x" + "0" * 24 + a[2:]  # noqa: E731
+        hot = "0x" + "aa" * 20
+        contracts = [hot] * 6 + [f"0x{i:040x}" for i in range(1, 9)]
+        other_topic = "0x" + "ee" * 32
+        rows = [
+            (
+                i % 50,
+                f"0xt{i}",
+                i % 7,
+                contracts[i % len(contracts)],
+                "0x" + format(1000 + i, "064x"),
+                ",".join(
+                    [TRANSFER_TOPIC0 if i % 4 else other_topic,
+                     word(hot), word(contracts[i % 5 + 6])]
+                ),
+                100 + i % 2,
+            )
+            for i in range(700)
+        ]
+        raw = spark.createDataFrame(
+            rows,
+            ["log_index", "transaction_hash", "transaction_index",
+             "address", "data", "topics", "block_number"],
+        ).withColumn(
+            "block_hash",
+            F.concat(F.lit("0xb"), F.col("block_number").cast("string")),
+        )
+        logs = enrich.enrich_logs(raw, _blocks(spark)).repartition(
+            self.N_TASKS
+        )
+        path = str(tmp_path / "logs")
+        self._write(logs, "2024-01-01", path)
+        assert _over_file_budget(spark, _bucket_dirs(path)) == {}
+        want = decode_log_events(logs, TRANSFER_EVENT, hot)
+        got = decode_log_events(spark.read.parquet(path), TRANSFER_EVENT, hot)
+        rows = Counter(got.collect())
+        assert rows == Counter(want.collect())
+        assert sum(rows.values()) == 225  # the hot contract's Transfer logs
 
 
 class TestRangeClusteredLayout:

@@ -162,6 +162,46 @@ class TestEndToEndDay:
         assert again["enrich_tokens"].count() == 15
 
 
+class TestEmptyExport:
+    def test_day_with_an_empty_export(self, spark, tmp_path):
+        """A day whose token_transfers export holds no rows: the enrich
+        task writes no parquet file, and reading the table back must not
+        need one to infer the schema (UNABLE_TO_INFER_SCHEMA)."""
+        from datawaves_etl_airflow_spark.operators import enrich
+        from datawaves_etl_airflow_spark.pipeline.runner import (
+            write_and_reload,
+        )
+        from datawaves_etl_airflow_spark.sources.staging import read_staging
+
+        base = os.path.join(fx.ensure_fixtures(), "export", "ethereum")
+
+        def export(table):
+            return os.path.join(
+                base, table, f"block_date={fx.DS}", f"{table}.json"
+            )
+
+        empty = tmp_path / "token_transfers.json"
+        empty.write_text("")
+        blocks = read_staging(spark, "blocks", export("blocks"))
+        tt = enrich.enrich_token_transfers(
+            read_staging(spark, "token_transfers", str(empty)), blocks
+        )
+        back = write_and_reload(tt, str(tmp_path / "tt"), fx.DS)
+        assert back.count() == 0
+        assert back.columns == [*tt.columns, "dt"]
+        # a non-empty bucketed table reads back exactly as schema
+        # inference would lay it out
+        logs = enrich.enrich_logs(
+            read_staging(spark, "logs", export("logs")), blocks
+        )
+        path = str(tmp_path / "logs")
+        back = write_and_reload(
+            logs, path, fx.DS, ["address_hash", "selector_hash"]
+        )
+        assert back.schema == spark.read.parquet(path).schema
+        assert back.count() == 300
+
+
 class TestPolygonChain:
     def test_geth_trace_pipeline(self, spark, tmp_path):
         """polygon config: traces come from geth exports without tx

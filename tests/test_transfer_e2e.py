@@ -142,8 +142,12 @@ class TestDecodedTableTransfer:
             def filter(self, *a, **k):
                 return self
 
-            def count(self):
-                return 3
+            def observe(self, observation, *exprs):
+                return self
+
+        class FakeObservation:
+            # the row count is observed during the save, not counted
+            get = {"n": 3}
 
         fake = FakeDF()
         # transfer_partition type-dispatches on DataFrame; let the fake
@@ -151,6 +155,7 @@ class TestDecodedTableTransfer:
         from pyspark.sql import DataFrame as RealDF
 
         monkeypatch.setattr(tr, "DataFrame", (RealDF, FakeDF))
+        monkeypatch.setattr(tr, "Observation", FakeObservation)
         target = TransferTarget(
             "jdbc",
             "jdbc:databricks://host:443/default",
@@ -164,3 +169,42 @@ class TestDecodedTableTransfer:
         assert captured["dbtable"] == "erc20_transfer"
         assert captured["user"] == "client"
         assert captured["password"] == "secret"
+
+
+class TestTransferCount:
+    """The returned count is observed during the copy itself (one pass
+    over the partition); it must equal what the target received."""
+
+    def _source(self, spark, tmp_path):
+        src = spark.createDataFrame(
+            [(i, f"v{i}") for i in range(5)], "k int, v string"
+        )
+        wh = str(tmp_path / "wh" / "t")
+        write_partitioned(src, "", DS, path=wh)
+        return wh
+
+    def test_path_target_count_matches_target_rows(self, spark, tmp_path):
+        wh = self._source(spark, tmp_path)
+        client = TransferTarget("path", str(tmp_path / "client"))
+        empty_day = "2023-11-15"  # no rows in the source
+        assert transfer_partition(spark, wh, client, "t", DS) == 5
+        assert transfer_partition(spark, wh, client, "t", empty_day) == 0
+        got = spark.read.parquet(str(tmp_path / "client" / "t"))
+        for ds, n in ((DS, 5), (empty_day, 0)):
+            assert got.filter(F.col("dt") == F.lit(ds).cast("date")).count() == n
+
+    def test_jdbc_target_count_matches_target_rows(self, spark, tmp_path):
+        """A real JDBC writer against an in-memory Derby database
+        (Derby's jar ships with Spark)."""
+        wh = self._source(spark, tmp_path)
+        url = f"jdbc:derby:memory:xfer_{tmp_path.name}"
+        client = TransferTarget("jdbc", f"{url};create=true")
+        for table, ds, n in (("t_day", DS, 5), ("t_empty", "2023-11-15", 0)):
+            assert transfer_partition(spark, wh, client, table, ds) == n
+            back = (
+                spark.read.format("jdbc")
+                .option("url", url)
+                .option("dbtable", table)
+                .load()
+            )
+            assert back.count() == n
